@@ -581,6 +581,8 @@ def simhash_signatures(
     :func:`simhash_col` (regression-tested) without the interpreted
     higher-order aggregate: tokens explode to rows once, the 60 per-bit
     majority votes run as sum() aggregates inside whole-stage codegen."""
+    if not 1 <= n_bits <= 60:
+        raise ValueError("n_bits must be in [1, 60]")
     trimmed = F.trim(F.coalesce(F.col(text_col), F.lit("")))  # NULL text == ''
     # same starvation-gated pre-repartition as minhash_signatures:
     # distribute the per-token md5 voting instead of letting it ride a
@@ -931,6 +933,13 @@ def _pair_cosine_by_id_udf(vecs_cached: DataFrame):
         idx, m = state["idx"], state["mat"]
         ia = idx.get_indexer(ida)
         ib = idx.get_indexer(idb)
+        if (ia < 0).any() or (ib < 0).any():
+            # -1 would silently score against the snapshot's last row
+            missing = sorted(set(ida[ia < 0]) | set(idb[ib < 0]))
+            raise ValueError(
+                f"pair cosine by id: {len(missing)} candidate id(s) not in "
+                f"the collected vector snapshot of {len(idx)} ids: {missing[:10]}"
+            )
         return pd.Series(np.round(np.einsum("ij,ij->i", m[ia], m[ib]), 6))
 
     _PAIR_SCORERS[vecs_cached] = cos_ids

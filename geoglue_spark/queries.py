@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .cover import build_cover
@@ -131,6 +131,25 @@ def _spread_scan(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def _ratio6(num: str, den: str) -> Column:
+    """``round(num / den, 6)`` half up, for non-negative whole-number sums:
+    integer division, so neither float rounding nor summation order can
+    move the result. The oracles spell the same expression over HUGEINT
+    (DuckDB divides DECIMALs in double)."""
+    return F.expr(
+        f"CAST(({num} * 2000000 + {den}) div ({den} * 2) AS DOUBLE) / 1000000"
+    )
+
+
+def _gray_milli_sum(mean_px: Column, n_px: Column) -> Column:
+    """An image's exact gray-level sum in thousandths, as DECIMAL(38,0).
+
+    A gray pixel is an integer level or 0.299 R + 0.587 G + 0.114 B, a
+    multiple of 0.001, so ``mean_px * n_px * 1000`` lies within float
+    error (~1e-7) of an integer and ``round`` recovers it exactly."""
+    return F.round(mean_px * n_px * 1000).cast("decimal(38,0)")
 
 
 def _assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -353,11 +372,15 @@ def q_image_tile_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # image_id would shuffle two fact-sized tables at 10^12 rows.
     assigned = assign_admin(imgs, cover, wkb, QUERY_GRID)
     dec = decode_stats(assigned, carry=("admin_id",))
-    npx = (F.col("w") * F.col("h")).cast("double")
+    npx = F.col("w") * F.col("h")
+    # exact DECIMAL sums, not a double weighted mean: the double sum's
+    # order follows the partitioning, and one admin's mean sits 5.8e-15
+    # from a 6-place rounding tie
     return dec.groupBy("admin_id").agg(
         F.count("*").alias("n_tiles"),
-        F.round(F.sum(F.col("mean_px") * npx) / F.sum(npx), 6).alias("mean_px"),
-    )
+        F.sum(_gray_milli_sum(F.col("mean_px"), npx)).alias("_s"),
+        (F.sum(npx.cast("decimal(38,0)")) * 1000).alias("_n"),
+    ).select("admin_id", "n_tiles", _ratio6("_s", "_n").alias("mean_px"))
 
 
 SQL_IMAGE_TILE_ZONAL = """
@@ -374,8 +397,11 @@ a AS (
          t.mean_px, t.n_px
   FROM imgs i JOIN truth t USING (image_id)
 )
+-- exact integer sums and a half-up integer division (see _ratio6)
 SELECT admin_id, count(*) AS n_tiles,
-       round(sum(mean_px * n_px) / sum(n_px), 6) AS mean_px
+       CAST((sum(CAST(round(mean_px * n_px * 1000) AS BIGINT)) * 2000000
+             + sum(n_px) * 1000) // (sum(n_px) * 2000) AS DOUBLE) / 1000000
+         AS mean_px
 FROM a GROUP BY 1
 """
 
@@ -453,16 +479,26 @@ def q_image_tile_zonal_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
         "image_id", "lon", "lat", "mean_px",
         (F.col("w") * F.col("h")).cast("double").alias("_npx"),
     )
-    # grouped=False: the admin aggregate is linear in frac, so per-cell
-    # contributions aggregate directly — ONE fact-scale shuffle, not two
     fr = assign_tiles_fractional(
         tiles, cover, QUERY_GRID, _TILE_W, _TILE_H,
-        id_cols=["image_id", "mean_px", "_npx"], grouped=False,
+        id_cols=["image_id", "mean_px", "_npx"],
     )
-    wpx = F.col("_contrib") * F.col("_npx")
+    # exact DECIMAL sums (see q_image_tile_zonal). A fraction is geometry,
+    # whose last bits differ between any two formulas, so each (tile,
+    # admin) fraction is fixed in billionths first; that needs the grouped
+    # per-tile fraction, since rounding per-cell parts would not add up to
+    # the rounded whole the oracle computes
+    f = F.round(F.col("frac") * 1e9).cast("decimal(38,0)")
+    g = _gray_milli_sum(F.col("mean_px"), F.col("_npx"))
+    n = F.col("_npx").cast("decimal(38,0)")
     return fr.groupBy("admin_id").agg(
-        F.round(F.sum("_contrib"), 6).alias("tile_mass"),
-        F.round(F.sum(F.col("mean_px") * wpx) / F.sum(wpx), 6).alias("mean_px"),
+        F.sum(f).alias("_f"),
+        F.sum(g * f).alias("_gf"),
+        (F.sum(n * f) * 1000).alias("_nf"),
+    ).select(
+        "admin_id",
+        _ratio6("_f", "1000000000L").alias("tile_mass"),
+        _ratio6("_gf", "_nf").alias("mean_px"),
     )
 
 
@@ -488,12 +524,22 @@ fr AS (
   SELECT image_id, printf('ADM2-%02d', ay * 10 + ax) AS admin_id,
          ox * oy / ({w} * {h}) AS frac
   FROM cand WHERE ox > 0 AND oy > 0
+),
+-- fractions fixed in billionths, gray sums in thousandths, then exact
+-- integer sums and a half-up integer division (see _ratio6)
+q AS (
+  SELECT admin_id,
+         CAST(round(frac * 1e9) AS HUGEINT) AS f,
+         CAST(round(mean_px * n_px * 1000) AS HUGEINT) AS g,
+         CAST(n_px AS HUGEINT) AS n
+  FROM fr JOIN truth USING (image_id)
 )
 SELECT admin_id,
-       round(sum(frac), 6) AS tile_mass,
-       round(sum(frac * mean_px * n_px) / sum(frac * n_px), 6) AS mean_px
-FROM fr JOIN truth USING (image_id)
-GROUP BY 1
+       CAST((sum(f) * 2000000 + 1000000000) // 2000000000 AS DOUBLE) / 1000000
+         AS tile_mass,
+       CAST((sum(g * f) * 2000000 + sum(n * f) * 1000) // (sum(n * f) * 2000)
+            AS DOUBLE) / 1000000 AS mean_px
+FROM q GROUP BY 1
 """
 
 

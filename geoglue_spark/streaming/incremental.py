@@ -15,6 +15,11 @@ resumable job:
      dynamic partitionOverwriteMode (idempotent replace-partition),
   4. appends manifest rows with metrics (rows/sec lineage, I4).
 
+The manifest is probed and appended through the Hadoop ``FileSystem``,
+with no Spark job: ``committed()`` asks the FileSystem whether the
+manifest exists before reading it, and ``record()`` writes its one-row
+parquet file with pyarrow under a hidden name and renames it into place.
+
 ``open_partition`` semantics (I2): a partition named "open" (e.g. the
 current month) is ALWAYS reprocessed and its manifest row replaced.
 """
@@ -24,7 +29,11 @@ from __future__ import annotations
 import datetime
 import json
 import time
+import uuid
 from dataclasses import dataclass
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +41,13 @@ from pyspark.sql import functions as F
 MANIFEST_SCHEMA = (
     "partition string, rows long, seconds double, rows_per_sec double, "
     "lineage string, committed_at string"
+)
+# the same schema for record()'s pyarrow writer
+_MANIFEST_ARROW = pa.schema(
+    [
+        (name, {"string": pa.string(), "long": pa.int64(), "double": pa.float64()}[t])
+        for name, t in (f.split() for f in MANIFEST_SCHEMA.split(", "))
+    ]
 )
 
 
@@ -41,18 +57,29 @@ class CheckpointManifest:
 
     path: str
 
+    def _fs(self, spark: SparkSession):
+        """The Hadoop FileSystem of the manifest, its Path class and root.
+
+        Through Hadoop, not os.path: the manifest may live on remote storage
+        (s3a/hdfs), where a local-FS check is always False and resume would
+        silently degrade to full reprocess."""
+        Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        root = Path(self.path)
+        return root.getFileSystem(spark._jsc.hadoopConfiguration()), Path, root
+
     def committed(self, spark: SparkSession) -> set[str]:
-        # probe via Spark, not os.path.exists: the manifest is written
-        # through Spark and may live on remote storage (s3a/hdfs), where a
-        # local-FS check is always False and resume would silently degrade
-        # to full reprocess
+        # a FileSystem probe first: a Spark read of a missing path fails
+        # and logs two stack traces
+        fs, _, root = self._fs(spark)
+        if not fs.exists(root):
+            return set()
         try:
             df = spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
             return {
                 r.partition
                 for r in df.select("partition").distinct().collect()
             }
-        except Exception as e:  # AnalysisException: path does not exist
+        except Exception as e:  # the path vanished after the probe
             msg = str(e)
             if "PATH_NOT_FOUND" in msg or "does not exist" in msg:
                 return set()
@@ -66,17 +93,34 @@ class CheckpointManifest:
         seconds: float,
         lineage: str = "",
     ) -> None:
-        row = [
-            (
-                partition,
-                rows,
-                float(seconds),
-                rows / seconds if seconds > 0 else 0.0,
-                lineage,
-                time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            )
-        ]
-        spark.createDataFrame(row, MANIFEST_SCHEMA).write.mode("append").parquet(self.path)
+        """Append one manifest row as its own parquet file, without a Spark
+        job. The file is written under a hidden name (Spark's file index
+        skips ``.``- and ``_``-prefixed files) and renamed into place, so a
+        reader never sees a partial file."""
+        table = pa.table(
+            {
+                "partition": [partition],
+                "rows": [int(rows)],
+                "seconds": [float(seconds)],
+                "rows_per_sec": [rows / seconds if seconds > 0 else 0.0],
+                "lineage": [lineage],
+                "committed_at": [time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())],
+            },
+            schema=_MANIFEST_ARROW,
+        )
+        buf = pa.BufferOutputStream()
+        pq.write_table(table, buf)
+        name = f"part-{uuid.uuid4()}.parquet"
+        fs, Path, root = self._fs(spark)
+        tmp, final = Path(root, f".{name}.tmp"), Path(root, name)
+        out = fs.create(tmp, False)
+        try:
+            out.write(buf.getvalue().to_pybytes())
+        finally:
+            out.close()
+        if not fs.rename(tmp, final):
+            fs.delete(tmp, False)
+            raise OSError(f"manifest {self.path}: could not rename {tmp} to {final}")
 
     def metrics(self, spark: SparkSession) -> DataFrame:
         """The I4 metrics table (latest row per partition)."""

@@ -593,3 +593,30 @@ def test_minhash_rejects_bad_band_count(spark):
     for bands in (0, 10, 128):  # non-divisor and > n_perm
         with pytest.raises(ValueError, match="bands"):
             D.minhash_near_dupes(df, "text", "doc_id", n_perm=64, bands=bands)
+
+
+def test_simhash_signatures_rejects_too_many_bits(spark):
+    """Beyond 60 bits the (1 << b) vote terms overflow a signed long; the
+    frame path must refuse like simhash_col, not fail later in analysis."""
+    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match=r"n_bits must be in \[1, 60\]"):
+        D.simhash_signatures(df, "text", "doc_id", n_bits=61)
+    with pytest.raises(ValueError, match=r"n_bits must be in \[1, 60\]"):
+        D.simhash_signatures(df, "text", "doc_id", n_bits=0)
+
+
+def test_pair_cosine_by_id_rejects_unknown_ids(spark):
+    """A candidate id missing from the collected vector snapshot must raise,
+    naming the id, instead of scoring against the snapshot's last row."""
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "_id long, _v array<double>"
+    ).cache()
+    try:
+        cos = D._pair_cosine_by_id_udf(vecs)
+        pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+        assert pairs.select(cos("id_a", "id_b").alias("c")).first().c == 0.0
+        bad = spark.createDataFrame([(1, 2), (1, 99)], "id_a long, id_b long")
+        with pytest.raises(Exception, match=r"not in the collected vector snapshot of 2 ids: \[99\]"):
+            bad.select(cos("id_a", "id_b")).collect()
+    finally:
+        vecs.unpersist()
