@@ -169,7 +169,6 @@ def assign_tiles_fractional(
     lat_col: str = "lat",
     blocks: DataFrame | None = None,
     block_shift: int = 4,
-    grouped: bool = True,
     max_fanout: int = 4096,
 ) -> DataFrame:
     """Fractional tile -> admin assignment for footprints that SPAN
@@ -181,13 +180,6 @@ def assign_tiles_fractional(
     ``cover.compact_cover`` (same ``block_shift``) — the same two-level
     join assignment and zonal use, so fine-grid world covers stay
     broadcastable (block hits are fully interior: coverage 1).
-
-    ``grouped=False`` skips the per-(tile, admin) groupBy and returns the
-    raw per-cell contributions (``id_cols + admin_id + _contrib``,
-    sum(_contrib) over a (tile, admin) pair = frac). Any downstream
-    aggregate LINEAR in frac (zonal means weighted by frac, admin mass)
-    can aggregate the contributions directly — fusing what would be two
-    fact-scale shuffles into the one final groupBy.
 
     Each tile is the bbox ``[lon +/- w/2] x [lat +/- h/2]`` around its
     center. The tile explodes to its candidate grid cells (bounded
@@ -279,8 +271,6 @@ def assign_tiles_fractional(
         ).withColumn("coverage", F.coalesce("coverage", F.lit(1.0)))
     contrib = F.col("coverage") * ox * oy / F.lit(tile_w_deg * tile_h_deg)
     raw = joined.withColumn("_contrib", contrib).filter(F.col("_contrib") > 0)
-    if not grouped:
-        return raw.select(*id_cols, "admin_id", "_contrib")
     return raw.groupBy(*id_cols, "admin_id").agg(F.sum("_contrib").alias("frac"))
 
 

@@ -457,8 +457,9 @@ def q_image_tile_zonal_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     (J8), and aggregate per-admin pixel means weighted by
     frac x pixel count — boundary tiles contribute to several admins in
     proportion to overlap instead of snapping to their center point.
-    One scan: decode carries lon/lat through the Arrow stage, the
-    fraction join is a broadcast, the only shuffle is the final agg.
+    One scan: decode carries lon/lat through the Arrow stage and the
+    fraction join is a broadcast. Two shuffles: the per-(tile, admin)
+    fraction groupBy and the admin aggregate.
     Oracle: ground-truth pixel stats (no codec round trip) x closed-form
     bbox fractions, entirely in DuckDB."""
     from .operators.assign import assign_tiles_fractional

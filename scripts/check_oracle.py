@@ -2,15 +2,14 @@
 entry on Spark and its oracle_sql() on DuckDB at the given sf dir, compare
 row count + schema-sorted values. Usage:
 
-    python scripts/check_oracle.py [sf_dir] [query ...] [--cores 2,4] [--exact]
+    python scripts/check_oracle.py [sf_dir] [query ...] [--cores 2,4]
 
 Each entry of ``--cores`` runs the whole set on a fresh ``local[n]``
 session, because a query whose result depends on the thread count passes at
-one level and fails at another. ``--exact`` compares rounded values, as
-an order-insensitive value hash of the result does: floats rounded to
-``--digits`` places, then every value equal. Without it, floats compare
-within 1e-9 relative. Every failure at every level is printed; the exit
-status is 1 if any comparison failed.
+one level and fails at another. Values compare as an order-insensitive
+value hash of the result does: floats rounded to 6 places, then every value
+equal. Every failure at every level is printed; the exit status is 1 if any
+comparison failed.
 """
 
 from __future__ import annotations
@@ -31,17 +30,16 @@ from geoglue_spark.session import get_spark
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+DIGITS = 6  # the places a value hash of the results rounds floats to
 
 
-def normalize(df: pd.DataFrame, digits: int | None = None) -> pd.DataFrame:
+def normalize(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1).copy()
     for c in df.columns:
         if pd.api.types.is_datetime64_any_dtype(df[c]):
             df[c] = df[c].astype("datetime64[us]")
         elif pd.api.types.is_float_dtype(df[c]):
-            df[c] = df[c].astype("float64")
-            if digits is not None:
-                df[c] = df[c].round(digits)
+            df[c] = df[c].astype("float64").round(DIGITS)
         elif pd.api.types.is_integer_dtype(df[c]):
             df[c] = df[c].astype("int64")
         elif df[c].dtype == object:
@@ -49,22 +47,16 @@ def normalize(df: pd.DataFrame, digits: int | None = None) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
-def compare(a: pd.DataFrame, b: pd.DataFrame, digits: int | None = None) -> str | None:
-    """None when equal. ``digits`` set: floats rounded, then exact equality;
-    otherwise floats within 1e-9 relative."""
+def compare(a: pd.DataFrame, b: pd.DataFrame) -> str | None:
+    """None when equal: floats rounded to DIGITS places, then exact equality."""
     if len(a) != len(b):
         return f"row count {len(a)} != {len(b)}"
     if sorted(a.columns) != sorted(b.columns):
         return f"columns {sorted(a.columns)} != {sorted(b.columns)}"
-    a, b = normalize(a, digits), normalize(b, digits)
+    a, b = normalize(a), normalize(b)
     for c in a.columns:
-        both_na = a[c].isna() & b[c].isna()
-        if digits is None and (
-            pd.api.types.is_float_dtype(a[c]) or pd.api.types.is_float_dtype(b[c])
-        ):
-            bad = ~(both_na | (abs(a[c] - b[c]) <= 1e-9 + 1e-9 * abs(b[c])))
-        elif pd.api.types.is_float_dtype(a[c]) and pd.api.types.is_float_dtype(b[c]):
-            bad = ~(both_na | (a[c] == b[c]))
+        if pd.api.types.is_float_dtype(a[c]) or pd.api.types.is_float_dtype(b[c]):
+            bad = ~((a[c].isna() & b[c].isna()) | (a[c] == b[c]))
         else:
             bad = a[c].astype(str) != b[c].astype(str)
         if bad.any():
@@ -83,11 +75,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         "--cores", default="2,4",
         help="comma-separated local[n] levels, each run on a fresh session",
     )
-    ap.add_argument(
-        "--exact", action="store_true",
-        help="round floats to --digits places and require equal values",
-    )
-    ap.add_argument("--digits", type=int, default=6)
     args = ap.parse_args(argv)
     args.cores = [int(c) for c in args.cores.split(",") if c.strip()]
     if not args.cores or min(args.cores) < 1:
@@ -98,7 +85,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(sys.argv[1:] if argv is None else argv)
     sf_dir, only = args.sf_dir, set(args.queries)
-    digits = args.digits if args.exact else None
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     unknown = only - set(qs)
@@ -115,7 +101,7 @@ def main(argv: list[str] | None = None) -> int:
     failures: list[str] = []
     for cores in args.cores:
         spark = get_spark(f"oracle-check-{cores}", cores=cores, shuffle_partitions=cores)
-        print(f"== local[{cores}]" + (f", exact at {digits} places" if args.exact else ""))
+        print(f"== local[{cores}]")
         for name, fn in qs.items():
             if only and name not in only:
                 continue
@@ -143,7 +129,7 @@ def main(argv: list[str] | None = None) -> int:
                 failures.append(tag)
                 print(f"FAIL  {tag}: duckdb error {ddf}")
                 continue
-            err = compare(sdf, ddf, digits)
+            err = compare(sdf, ddf)
             if err:
                 failures.append(tag)
                 print(f"FAIL  {tag}: {err} ({took:.1f}s)")
